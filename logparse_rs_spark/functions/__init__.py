@@ -140,14 +140,3 @@ def tokenize_col(col, prefix: str, field_salt: str, default_salt: str) -> F.Colu
         return hexes
 
     return _tok(col)
-
-
-def exact_split_col(col) -> F.Column:
-    """Exact quote-aware CSV split as a standalone column (used outside the
-    main pipeline, e.g. to expose the reference's split_csv API surface)."""
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def _split(s: pd.Series) -> pd.Series:
-        return s.fillna("").map(split_csv)
-
-    return _split(col)

@@ -70,20 +70,6 @@ def anonymize_expr(col: Column, plan: FieldPlan, default_salt: str) -> Column:
             .otherwise(F.coalesce(lookup, miss))
 
 
-def anonymize_columns(df: DataFrame, anon: CompiledAnonymizer,
-                      columns: Iterable[str]) -> DataFrame:
-    """Wrap each named column of an already-projected DataFrame in its
-    anonymization expression (one withColumns pass -> one ArrowEvalPython
-    stage for all tokenized columns)."""
-    replacements: Dict[str, Column] = {}
-    for name in columns:
-        plan = anon.plan_for(name)
-        if plan.mode is None:
-            continue
-        replacements[name] = anonymize_expr(F.col(name), plan, anon.default_salt)
-    return df.withColumns(replacements) if replacements else df
-
-
 def anonymize_with_dict_join(df: DataFrame, spark: SparkSession, column: str,
                              mapping: Dict[str, str], miss: Column) -> DataFrame:
     """Broadcast-hash-join strategy for genuinely large map-mode dictionaries

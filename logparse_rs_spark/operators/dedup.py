@@ -16,7 +16,8 @@ Strategies:
                          candidate pair list (verification stage after LSH).
 
 All heavy per-doc math is Arrow-batched numpy; joins are equi-joins on
-hash-uniform keys (no skew); nothing collects to the driver.
+hash-uniform keys (no skew); rows reach the driver only through the size
+gate of the broadcast fast paths (gate.collect_within).
 """
 
 from __future__ import annotations
@@ -28,6 +29,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..gate import collect_within, session_frame
 
 # deterministic 64-bit mix constants (splitmix64)
 _MIX1 = np.uint64(0xBF58476D1CE4E5B9)
@@ -94,7 +97,6 @@ def _pair_common(ea, eb) -> int:
     return int(np.intersect1d(ea[0], eb[0], assume_unique=True).size)
 
 
-_TEXT_BCAST_CACHE: dict = {}
 _PAIR_VEC_STATE: dict = {}
 _POP8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint16)
 
@@ -159,23 +161,30 @@ def _pair_counts_vec(st, ia: np.ndarray, ib: np.ndarray):
 
 def _bcast_norm_texts(docs: DataFrame, text_col: str, id_col: str):
     """Broadcast {id: normalized text} for the pair-verify kernels, or
-    None when the corpus exceeds the broadcast budget
-    (LPS_PAIRVERIFY_BCAST_MB, default 64 MB).
+    None when the corpus exceeds the driver-collect budget or its ids are
+    not integral (gate.collect_within).
 
     The join form ships each doc's normalized text once PER CANDIDATE
     PAIR through two id-keyed joins — for a 12.6M-pair set over a 14 MB
     corpus that is ~7.5 GB of duplicated text through the exchanges
     (guide §8: shuffle a lightweight proxy, keep the heavy bytes still).
-    Sizing probe: a 1k-row length sample plus a pruned count estimates
-    the total; oversized corpora return None and keep the join plan."""
-    import os
-
+    The gate sizes the texts exactly (one aggregate job) before any row
+    reaches the driver; None keeps the join plan."""
     import hashlib
-    import os
 
-    budget = int(os.environ.get("LPS_PAIRVERIFY_BCAST_MB", "64")) << 20
-    norm = docs.select(F.col(id_col).cast("long").alias("_id"),
+    norm = docs.select(F.col(id_col).alias("_id"),
                        normalized_text(F.col(text_col)).alias("_nt"))
+    spark = docs.sparkSession
+
+    def build():
+        pdf = collect_within(
+            norm, F.coalesce(F.length("_nt"), F.lit(0)) + 120, "_id",
+            what="pair_verify_texts")
+        if pdf is None:
+            return None
+        return spark.sparkContext.broadcast(
+            dict(zip(pdf["_id"].tolist(), pdf["_nt"].tolist())))
+
     # one broadcast per distinct input PLAN per session (canonicalized —
     # expression ids normalized): re-broadcasting the same corpus per
     # call would also rebuild every worker's gram state, because that
@@ -183,36 +192,12 @@ def _bcast_norm_texts(docs: DataFrame, text_col: str, id_col: str):
     # plans are cacheable: a LocalRelation/LogicalRDD/Range leaf prints
     # without its data, so two different in-memory corpora with the same
     # schema would collide on the key (caught by a pytest corpus swap).
-    spark = docs.sparkSession
     plan_str = (norm._jdf.queryExecution().analyzed()
                 .canonicalized().toString())
-    cacheable = not any(m in plan_str for m in
-                        ("LocalRelation", "LogicalRDD", "Range "))
-    key = (spark.sparkContext.applicationId,
-           hashlib.md5(plan_str.encode()).hexdigest())
-    if cacheable and key in _TEXT_BCAST_CACHE:
-        return _TEXT_BCAST_CACHE[key]
-    sample = norm.select(F.length("_nt").alias("L")).limit(1000).collect()
-    if not sample:
-        bc = spark.sparkContext.broadcast({})
-        if cacheable:
-            _TEXT_BCAST_CACHE[key] = bc
-        return bc
-    avg = sum((r[0] or 0) for r in sample) / len(sample)
-    n_rows = docs.select(id_col).count()
-    if n_rows * (avg + 120) > budget:
-        if cacheable:
-            _TEXT_BCAST_CACHE[key] = None
-        return None
-    rows = norm.collect()
-    if sum(len(r[1] or "") for r in rows) + 120 * len(rows) > budget:
-        if cacheable:
-            _TEXT_BCAST_CACHE[key] = None
-        return None
-    bc = spark.sparkContext.broadcast({r[0]: r[1] for r in rows})
-    if cacheable:
-        _TEXT_BCAST_CACHE[key] = bc
-    return bc
+    if any(m in plan_str for m in ("LocalRelation", "LogicalRDD", "Range ")):
+        return build()
+    key = ("pair_verify_texts", hashlib.md5(plan_str.encode()).hexdigest())
+    return session_frame(spark, key, build)
 
 
 def _pairs_with_known_ids(pairs: DataFrame, docs: DataFrame,
@@ -556,25 +541,23 @@ def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     return docs.select(F.col(id_col), _simhash(F.col(text_col)).alias("simhash"))
 
 
+# candidate-pair volume above which the broadcast simhash path hands its
+# collected hashes to the JVM chunk join
+_SIMHASH_BCAST_MAX_PAIRS = 2_000_000
+
+
 def _simhash_candidates_broadcast(sim: DataFrame, id_col: str,
                                   chunks: int, max_bucket):
-    """Broadcast fast path for simhash_candidates (same gate discipline
-    as the neardup/verify kernels, env LPS_NEARDUP_BCAST_MB): when the
-    (id, simhash) table fits the budget, each chunk becomes one numpy
-    task over the broadcast arrays — bucket slicing, the max_bucket cap,
-    pair enumeration and the XOR popcount all happen in-task, and only
+    """Broadcast fast path for simhash_candidates, gated by
+    gate.collect_within (integral ids, 16 bytes a row): when the (id,
+    simhash) table fits, each chunk becomes one numpy task over the
+    broadcast arrays — bucket slicing, the max_bucket cap, pair
+    enumeration and the XOR popcount all happen in-task, and only
     candidate pairs leave. The chunk self-join shuffles nothing. None
     above the gate; identical pairs + hamming, same final dedup."""
-    import os
-
-    budget = int(os.environ.get("LPS_NEARDUP_BCAST_MB", "64")) << 20
-    max_rows = max(1, budget // 16)
-    if sim.schema[id_col].dataType.typeName() not in (
-            "long", "integer", "short", "byte"):
-        return None
-    head = sim.select(F.col(id_col).cast("long"),
-                      "simhash").limit(max_rows + 1).collect()
-    if len(head) > max_rows:
+    head = collect_within(sim.select(id_col, "simhash"), 16, id_col,
+                          what="simhash_candidates")
+    if head is None:
         return None
     spark = sim.sparkSession
     out_schema = T.StructType([
@@ -582,17 +565,15 @@ def _simhash_candidates_broadcast(sim: DataFrame, id_col: str,
         T.StructField("id_b", T.LongType()),
         T.StructField("hamming", T.IntegerType()),
     ])
-    if not head:
+    if head.empty:
         return _distinct_pairs(spark.createDataFrame([], out_schema))
     width = 64 // chunks
     mask = np.uint64((1 << width) - 1)
-    ids = np.array([r[0] for r in head], dtype=np.int64)
-    sh = np.array([r[1] for r in head], dtype=np.int64).view(np.uint64)
+    ids = head[id_col].to_numpy(np.int64)
+    sh = head["simhash"].to_numpy(np.int64).view(np.uint64)
     # exact cost gate, computed from the already-collected hashes: at
     # high candidate volume the Python->Arrow pair emission loses to the
     # JVM chunk join, so route big outputs back to the join plan
-    max_pairs = int(os.environ.get("LPS_SIMHASH_BCAST_MAX_PAIRS",
-                                   str(2_000_000)))
     est = 0
     for chunk in range(chunks):
         vals = np.sort((sh >> np.uint64(chunk * width)) & mask)
@@ -601,7 +582,7 @@ def _simhash_candidates_broadcast(sim: DataFrame, id_col: str,
         if max_bucket is not None:
             sizes = sizes[sizes <= max_bucket]
         est += int((sizes * (sizes - 1) // 2).sum())
-    if est > max_pairs:
+    if est > _SIMHASH_BCAST_MAX_PAIRS:
         # high candidate volume: Python-side pair emission loses to the
         # JVM chunk join — run the join over the ALREADY-COLLECTED
         # hashes (one UDF pass total; the self-join aliases of the lazy

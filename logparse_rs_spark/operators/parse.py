@@ -149,10 +149,9 @@ def project_type(parsed: DataFrame, schema: CompiledSchema, log_type: str,
 
     Physical-form note: the full-width TRAFFIC projection (117 F.get +
     anon expressions, whole-stage codegen) was measured against a single
-    mapInPandas stage doing the same split+project+anonymize in Python
-    (tools/probe_wide_projection.py): JVM form 6.5-10s vs pandas form
-    21-25s at 1.23M rows / 8 cores — the codegen'd gets win ~3x, so wide
-    projections stay JVM-side.
+    mapInPandas stage doing the same split+project+anonymize in Python:
+    JVM form 6.5-10s vs pandas form 21-25s at 1.23M rows / 8 cores — the
+    codegen'd gets win ~3x, so wide projections stay JVM-side.
     """
     pairs = schema.effective_positions(log_type)
     if columns is not None:

@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..gate import collect_within
+
 
 def _vec_matrix(vecs: "pd.Series") -> np.ndarray:
     """(rows, dim) float64 matrix from an Arrow list column. np.stack over
@@ -246,28 +248,26 @@ def _neardup_pairs_broadcast(vectors: DataFrame, dim: int, threshold: float,
                              n_planes: int, bands: int, seed: int,
                              id_col: str, vec_col: str):
     """Broadcast-matrix fast path for neardup_pairs, or None when the
-    vector set exceeds the broadcast budget.
+    vector set exceeds the driver-collect budget.
 
     The banded plan shuffles every embedding once PER BAND (guide §2.3:
     the exchange carries the heavy payload `bands` times so a few bytes of
     bucket key can be grouped on), and applyInPandas re-inflates the
     vector column into numpy per group. When the whole (rows, dim) matrix
-    fits the broadcast budget (LPS_NEARDUP_BCAST_MB, default 64 MB — the
-    same order as an auto-broadcast join side), each band is instead an
-    independent numpy task over the broadcast matrix: zero embedding
-    shuffle, bucket slicing by signature bits, and only surviving pairs
-    leave the task. Identical output: same candidate set (pairs sharing
-    >= 1 band bucket), same exact-float64 cosine, same final min/round
-    dedup. A float32 coarse gate (margin 1e-3 >> the f32 matmul error
-    bound of ~dim*2^-20 on unit vectors) only PRE-SELECTS candidates;
-    every emitted score is exact float64, and the gate cannot drop a true
-    pair because the margin exceeds the rounding error."""
-    import os
-
-    budget = int(os.environ.get("LPS_NEARDUP_BCAST_MB", "64")) << 20
-    max_rows = max(1, budget // (dim * 8))
-    head = vectors.select(id_col, vec_col).limit(max_rows + 1).collect()
-    if len(head) > max_rows:
+    fits the driver-collect budget (gate.collect_within, integral ids,
+    dim * 8 bytes a row), each band is instead an independent numpy task
+    over the broadcast matrix: zero embedding shuffle, bucket slicing by
+    signature bits, and only surviving pairs leave the task. Identical
+    output: same candidate set (pairs sharing >= 1 band bucket), same
+    exact-float64 cosine, same final min/round dedup. A float32 coarse
+    gate only PRE-SELECTS candidates; every emitted score is exact
+    float64. The f32 dot of two unit vectors is off by at most ~dim *
+    2^-24 (one rounding per product and per addition), so the gate margin
+    max(1e-3, dim * 2^-20) is at least 16x that bound at every dim and
+    the gate cannot drop a true pair."""
+    head = collect_within(vectors.select(id_col, vec_col), dim * 8, id_col,
+                          what="neardup_pairs")
+    if head is None:
         return None
     spark = vectors.sparkSession
     out_schema = T.StructType([
@@ -275,21 +275,21 @@ def _neardup_pairs_broadcast(vectors: DataFrame, dim: int, threshold: float,
         T.StructField("id_b", T.LongType()),
         T.StructField("cos_sim", T.DoubleType()),
     ])
-    if not head:
+    if head.empty:
         pairs = spark.createDataFrame([], out_schema)
         return (pairs.groupBy("id_a", "id_b")
                 .agg(F.round(F.min("cos_sim"), 6).alias("cos_sim")))
     width = n_planes // bands
     mask = (1 << width) - 1
-    ids = np.array([r[0] for r in head], dtype=np.int64)
-    vm = np.array([list(r[1]) for r in head], dtype=np.float64)
+    ids = head[id_col].to_numpy(np.int64)
+    vm = _vec_matrix(head[vec_col])
     sigs = hyperplane_sig_np(vm, hyperplane_planes(dim, n_planes, seed))
     norms = np.linalg.norm(vm, axis=1)
     norms[norms == 0] = 1.0
     vn = vm / norms[:, None]
     bc = spark.sparkContext.broadcast(
         (ids, vn, vn.astype(np.float32), sigs.view(np.uint64)))
-    coarse = threshold - 1e-3
+    coarse = threshold - max(1e-3, dim * 2.0 ** -20)
 
     def score_bands(pdfs):
         b_ids, b_vn, b_vn32, b_usigs = bc.value

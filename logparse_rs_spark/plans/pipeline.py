@@ -24,7 +24,6 @@ Scale notes (the design constraints this file encodes):
 
 from __future__ import annotations
 
-import os
 import time
 import uuid
 from dataclasses import dataclass, field
@@ -91,6 +90,13 @@ STAGE_TABLE = "_parsed_stage"
 METRICS_TABLE = "_metrics"
 AUDIT_TABLE = "_audit"
 REJECTS_TABLE = "_rejects"
+
+# concurrent fan-out sink jobs: enough to hide per-job commit latency (task
+# parallelism inside each job already uses every core). Fixed, not
+# core-derived: more jobs meant more simultaneous partitionBy commits
+# contending on the store, and a fixed width gives an N-core and a 4N-core
+# run the identical job schedule.
+SINK_CONCURRENCY = 4
 
 
 def build_map_payload(parsed: DataFrame, schema: CompiledSchema,
@@ -363,15 +369,6 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig,
     if audit_dims_active:
         jobs.append(("audit", write_audit))
     t_sinks = time.perf_counter()
-    # concurrent fan-out jobs: enough to hide per-job commit latency, FIXED
-    # at 4 — r1 scaled this with defaultParallelism and the commit phase
-    # anti-scaled (more cores -> more simultaneous partitionBy commits
-    # contending on the store). Task-level parallelism inside each job
-    # already uses every core; job-level concurrency only needs to cover
-    # scheduling + commit gaps. Fixed (not core-derived) so an N-core and a
-    # 4N-core run execute the IDENTICAL job schedule — the cluster-size
-    # scaling comparison then varies exactly one thing.
-    pool_width = int(os.environ.get("LOGPARSE_SINK_CONCURRENCY", "4"))
     def timed(label: str, job):
         def run():
             t = time.perf_counter()
@@ -379,7 +376,8 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig,
             timings[f"sink:{label}"] = round(time.perf_counter() - t, 3)
         return run
 
-    with ThreadPoolExecutor(max_workers=min(pool_width, len(jobs))) as pool:
+    with ThreadPoolExecutor(
+            max_workers=min(SINK_CONCURRENCY, len(jobs))) as pool:
         futures = [pool.submit(timed(lbl, j)) for lbl, j in jobs]
         for f in futures:
             f.result()  # surface the first failure

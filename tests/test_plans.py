@@ -82,9 +82,10 @@ class TestParsedCache:
         a = entrymod.queries()["log_status_counts"](spark, SF)
         b = entrymod.queries()["log_status_counts"](spark, SF)
         assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-        from __spark_entry__ import _PARSED_CACHE
-        assert any(spark.sparkContext.applicationId == k[0]
-                   for k in _PARSED_CACHE)
+        from logparse_rs_spark.gate import RECORD
+        pages_path, _ = entrymod._fixture_paths(SF)
+        assert entrymod._parsed(spark, SF) is entrymod._parsed(spark, SF)
+        assert RECORD[-1] == {"event": "hit", "key": ("parsed", pages_path)}
 
 
 class TestRound3Plans:
