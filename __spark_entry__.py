@@ -475,14 +475,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return language_id(_docs(spark, sf_dir))
 
     def doc_ngram_jaccard(spark, sf_dir):
-        from logparse_rs_spark.operators.dedup import ngram_jaccard
-        docs = _docs(spark, sf_dir)
-        ids = docs.filter("doc_id < 6").select("doc_id")
+        from logparse_rs_spark.operators.dedup import ngram_jaccard_pairs_fast
+        # every pair id is < 6, so verifying against the filtered docs
+        # gives the same rows and gates 6 texts, not the corpus
+        docs = _docs(spark, sf_dir).filter("doc_id < 6")
+        ids = docs.select("doc_id")
         a, b = ids.alias("a"), ids.alias("b")
         pairs = (a.join(b, F.col("a.doc_id") < F.col("b.doc_id"))
                  .select(F.col("a.doc_id").alias("id_a"),
                          F.col("b.doc_id").alias("id_b")))
-        return ngram_jaccard(docs, pairs, n=3) \
+        return ngram_jaccard_pairs_fast(docs, pairs, n=3) \
             .withColumn("jaccard", F.round("jaccard", 6))
 
     def _doc_pairs(spark, sf_dir):

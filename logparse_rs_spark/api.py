@@ -324,7 +324,7 @@ def _ndjson_via_spark(input_path: str, output_path: str,
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    from .operators.parse import fields_col, parse_lines
+    from .operators.parse import fields_col, parse_lines, typed_fields
 
     spark = SparkSession.getActiveSession()
     assert spark is not None
@@ -345,10 +345,8 @@ def _ndjson_via_spark(input_path: str, output_path: str,
     # exact record shape with unsigned hash64.
     json_payload = None
     for t in schema.known_types:
-        pairs = schema.effective_positions(t)
         s = F.to_json(
-            F.struct(*[F.get(F.col("fields"), pos).alias(name)
-                       for name, pos in pairs]),
+            F.struct(*[c.alias(name) for name, c in typed_fields(schema, t)]),
             {"ignoreNullFields": "false"})
         json_payload = (F.when(F.col("log_type") == t, s) if json_payload is None
                         else json_payload.when(F.col("log_type") == t, s))

@@ -16,6 +16,7 @@ from ..kernels import (
     fnv1a_series,
     split_csv,
     strip_syslog_prefix_series,
+    tokenize_series,
 )
 
 # The three per-line Python kernels are SEPARATE nondeterministic pandas UDFs
@@ -25,66 +26,53 @@ from ..kernels import (
 #   - asNondeterministic() is an optimizer barrier so neither predicate
 #     pushdown nor projection collapse re-evaluates a UDF per reference
 #     (observed: the status filter otherwise duplicates the whole stage).
-# Each re-does the (cheap, vectorized) prefix strip rather than chaining on a
+# Each re-does the (cheap, vectorized) line prep rather than chaining on a
 # previous UDF's output — chained Python UDFs would need two stages.
 
 
-@F.pandas_udf(T.StringType())
-def _line_of(raw: pd.Series) -> pd.Series:
-    """Stripped CSV line (syslog prefix removed, whitespace trimmed)."""
-    return strip_syslog_prefix_series(raw)
+def _line_udfs(prep, suffix: str):
+    """(line, hash64, qfields) UDFs over ``prep(raw)``, named
+    ``_line_of{suffix}``/``_hash64_of{suffix}``/``_qfields_of{suffix}``
+    in the plan."""
+
+    def line_of(raw: pd.Series) -> pd.Series:
+        return prep(raw)
+
+    def hash64_of(raw: pd.Series) -> pd.Series:
+        """FNV-1a-64 of the prepared line, two's-complement int64."""
+        line = prep(raw)
+        return pd.Series(fnv1a_series(line).view("int64"), index=line.index)
+
+    def qfields_of(raw: pd.Series) -> pd.Series:
+        """Exact quote-aware split for lines containing a double quote; null
+        for quote-free lines (the JVM built-in `split` is exactly equivalent
+        there)."""
+        line = prep(raw)
+        has_quote = line.str.contains('"', regex=False)
+        out = pd.Series([None] * len(line), index=line.index, dtype=object)
+        if has_quote.any():
+            out[has_quote] = line[has_quote].map(split_csv)
+        return out
+
+    udfs = []
+    for fn, rtype in ((line_of, T.StringType()), (hash64_of, T.LongType()),
+                      (qfields_of, T.ArrayType(T.StringType()))):
+        fn.__name__ = f"_{fn.__name__}{suffix}"
+        udfs.append(F.pandas_udf(fn, rtype).asNondeterministic())
+    return tuple(udfs)
 
 
-@F.pandas_udf(T.LongType())
-def _hash64_of(raw: pd.Series) -> pd.Series:
-    """FNV-1a-64 of the stripped line, two's-complement int64."""
-    line = strip_syslog_prefix_series(raw)
-    return pd.Series(fnv1a_series(line).view("int64"), index=line.index)
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def _qfields_of(raw: pd.Series) -> pd.Series:
-    """Exact quote-aware split for lines containing a double quote; null for
-    quote-free lines (the JVM built-in `split` is exactly equivalent there)."""
-    line = strip_syslog_prefix_series(raw)
-    has_quote = line.str.contains('"', regex=False)
-    out = pd.Series([None] * len(line), index=line.index, dtype=object)
-    if has_quote.any():
-        out[has_quote] = line[has_quote].map(split_csv)
-    return out
-
-
-@F.pandas_udf(T.StringType())
-def _line_of_raw(raw: pd.Series) -> pd.Series:
-    """Raw-line variant (NDJSON path parity, bindings lib.rs:394-463: the
+def _trim_cr(raw: pd.Series) -> pd.Series:
+    """Raw-line prep (NDJSON path parity, bindings lib.rs:394-463: the
     reference parses the raw line — no syslog strip, no trim). Only a single
     trailing \\r is removed, replicating the Python path's universal-newline
     decoding of CRLF files (spark.read.text splits on \\n alone)."""
     return raw.str.replace(r"\r$", "", regex=True)
 
 
-@F.pandas_udf(T.LongType())
-def _hash64_of_raw(raw: pd.Series) -> pd.Series:
-    line = raw.str.replace(r"\r$", "", regex=True)
-    return pd.Series(fnv1a_series(line).view("int64"), index=line.index)
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def _qfields_of_raw(raw: pd.Series) -> pd.Series:
-    line = raw.str.replace(r"\r$", "", regex=True)
-    has_quote = line.str.contains('"', regex=False)
-    out = pd.Series([None] * len(line), index=line.index, dtype=object)
-    if has_quote.any():
-        out[has_quote] = line[has_quote].map(split_csv)
-    return out
-
-
-line_of = _line_of.asNondeterministic()
-hash64_of = _hash64_of.asNondeterministic()
-qfields_of = _qfields_of.asNondeterministic()
-line_of_raw = _line_of_raw.asNondeterministic()
-hash64_of_raw = _hash64_of_raw.asNondeterministic()
-qfields_of_raw = _qfields_of_raw.asNondeterministic()
+# pipeline form: syslog prefix removed, whitespace trimmed
+line_of, hash64_of, qfields_of = _line_udfs(strip_syslog_prefix_series, "")
+line_of_raw, hash64_of_raw, qfields_of_raw = _line_udfs(_trim_cr, "_raw")
 
 
 def fnv1a_col(col, salt_bytes: bytes = b"") -> F.Column:
@@ -115,28 +103,10 @@ def fnv1a_col(col, salt_bytes: bytes = b"") -> F.Column:
 
 
 def tokenize_col(col, prefix: str, field_salt: str, default_salt: str) -> F.Column:
-    """Deterministic anonymization token column (table.rs:28-44 semantics).
-    Null in -> null out. The salt pair collapses to a precomputed FNV seed, so
-    the UDF is a pure hash over the value bytes."""
-    seed = fnv1a_seed(
-        field_salt.encode("utf-8", errors="ignore")
-        + default_salt.encode("utf-8", errors="ignore")
-    )
-
+    """Deterministic anonymization token column (table.rs:28-44 semantics,
+    kernels.tokenize_series). Null in -> null out."""
     @F.pandas_udf(T.StringType())
     def _tok(s: pd.Series) -> pd.Series:
-        import numpy as np
-
-        isnull = s.isna()
-        hashes = fnv1a_series(s, seed=seed)
-        if len(s):
-            hexes = pd.Series(
-                pd.array(np.char.add(prefix, np.char.mod("%016x", hashes))),
-                index=s.index,
-            ).astype(object)
-        else:
-            hexes = pd.Series([], index=s.index, dtype=object)
-        hexes[isnull] = None
-        return hexes
+        return tokenize_series(s, prefix, field_salt, default_salt)
 
     return _tok(col)

@@ -6,9 +6,9 @@ unnecessary — each mode compiles to a column expression:
 
 - fixed     -> F.lit(const)                         (table.rs:58)
 - tokenize  -> Arrow-batched keyed-FNV pandas UDF   (table.rs:28-44)
-- map       -> small dict: F.when chain; large dict: broadcast hash join
-              (J1 in SURVEY §2.5); miss -> fallback expr; reject-miss keeps
-              the ORIGINAL value (src/lib.rs:354-359)
+- map       -> small dict: F.when chain; large dict: map-literal lookup;
+              miss -> fallback expr; reject-miss keeps the ORIGINAL value
+              (src/lib.rs:354-359)
 
 Null values are never anonymized (src/lib.rs:353) — every expression is
 null-preserving.
@@ -19,15 +19,15 @@ distinct aggregation over (pre, post) column pairs — see audit_table().
 
 from __future__ import annotations
 
-from typing import Dict, Iterable, List, Optional, Tuple
+from typing import Iterable, List, Optional
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..anonymizer import CompiledAnonymizer, FieldPlan
 from ..functions import tokenize_col
 
-# above this, a map-mode dictionary becomes a broadcast join instead of a
+# above this, a map-mode dictionary becomes a map-literal lookup instead of a
 # when-chain (whole-stage codegen degrades on very long case chains)
 WHEN_CHAIN_MAX = 32
 
@@ -60,33 +60,13 @@ def anonymize_expr(col: Column, plan: FieldPlan, default_salt: str) -> Column:
         hit = expr.otherwise(miss) if expr is not None else miss
         return F.when(col.isNull(), F.lit(None).cast("string")).otherwise(hit)
     # large dictionary: try_element_at on a map literal keeps it JVM-side and
-    # broadcast once per task via the literal; for very large dicts use
-    # anonymize_with_dict_join instead.
+    # broadcast once per task via the literal
     entries: List[Column] = []
     for k, v in plan.map.items():
         entries.extend([F.lit(k), F.lit(v)])
     lookup = F.try_element_at(F.create_map(*entries), col)
     return F.when(col.isNull(), F.lit(None).cast("string")) \
             .otherwise(F.coalesce(lookup, miss))
-
-
-def anonymize_with_dict_join(df: DataFrame, spark: SparkSession, column: str,
-                             mapping: Dict[str, str], miss: Column) -> DataFrame:
-    """Broadcast-hash-join strategy for genuinely large map-mode dictionaries
-    (SURVEY §2.5 J1): build a 2-column dim table, broadcast it, left-join on
-    the value, coalesce(mapped, miss). At 100 TB the fact side never shuffles
-    — only the dict moves."""
-    dim = spark.createDataFrame(
-        [(k, v) for k, v in mapping.items()], schema=f"__orig string, __repl string"
-    )
-    joined = df.join(F.broadcast(dim), df[column] == dim["__orig"], "left")
-    return (
-        joined
-        .withColumn(column, F.when(F.col(column).isNull(),
-                                   F.lit(None).cast("string"))
-                    .otherwise(F.coalesce(F.col("__repl"), miss)))
-        .drop("__orig", "__repl")
-    )
 
 
 def audit_table(pre: DataFrame, anon: CompiledAnonymizer,
@@ -128,10 +108,3 @@ def audit_table(pre: DataFrame, anon: CompiledAnonymizer,
                 else repl.when(F.col("field") == name, e))
     return distinct.select("field", "original", repl.alias("replacement"))
 
-
-def anonymizer_status(audit: DataFrame) -> Tuple[int, int]:
-    """{fields, pairs} counts (get_anonymizer_status, src/lib.rs:302-317)."""
-    row = audit.agg(
-        F.countDistinct("field").alias("fields"), F.count("*").alias("pairs")
-    ).collect()[0]
-    return row["fields"], row["pairs"]

@@ -12,7 +12,7 @@ Strategies:
                          is uniform by construction (it's a hash).
 - simhash_dedup        : 64-bit simhash + Hamming-ball banding (4 x 16-bit
                          chunks -> near-dup candidates must share a chunk).
-- ngram_jaccard_pairs  : exact Jaccard on character n-gram sets for a
+- ngram_jaccard_pairs_fast : exact Jaccard on character n-gram sets for a
                          candidate pair list (verification stage after LSH).
 
 All heavy per-doc math is Arrow-batched numpy; joins are equi-joins on
@@ -706,31 +706,6 @@ def _simhash_chunk_join(sim: DataFrame, id_col: str, chunks: int,
     return _distinct_pairs(pairs)
 
 
-def ngram_jaccard(docs: DataFrame, pairs: DataFrame, text_col: str = "text",
-                  id_col: str = "doc_id", n: int = 3) -> DataFrame:
-    """Exact char-n-gram Jaccard for candidate pairs (the verify stage after
-    LSH). Shingle sets are computed once per doc and joined to the pairs —
-    two broadcast-able joins, set math JVM-side via array functions."""
-    grams = docs.select(
-        F.col(id_col),
-        F.array_distinct(_ngram_array(F.col(text_col), n)).alias("grams"),
-    )
-    a = grams.alias("a")
-    b = grams.alias("b")
-    union = F.size(F.array_union("a.grams", "b.grams"))
-    return (
-        pairs.join(a, pairs["id_a"] == F.col(f"a.{id_col}"))
-        .join(b, pairs["id_b"] == F.col(f"b.{id_col}"))
-        .select(
-            "id_a", "id_b",
-            # two empty gram sets -> null, not an ANSI divide-by-zero error
-            F.when(union > 0,
-                   F.size(F.array_intersect("a.grams", "b.grams")) / union)
-            .alias("jaccard"),
-        )
-    )
-
-
 def _gram_hash_np(t: str, n: int) -> np.ndarray:
     """Sorted unique uint64 codes of the char-n-grams of an (already
     normalized) string. For n <= 3 the encoding packs the code points into
@@ -754,90 +729,86 @@ def _gram_hash_np(t: str, n: int) -> np.ndarray:
     return np.unique(h)
 
 
-def ngram_jaccard_pairs_fast(docs: DataFrame, pairs: DataFrame,
-                             text_col: str = "text", id_col: str = "doc_id",
-                             n: int = 3) -> DataFrame:
-    """Exact char-n-gram Jaccard verify for LARGE candidate-pair sets.
+def _pair_gram_verify(docs: DataFrame, pairs: DataFrame, text_col: str,
+                      id_col: str, n: int, return_type, finish) -> DataFrame:
+    """(id_a, id_b, _v) for candidate pairs, where _v is
+    ``finish(n_common, n_a, n_b)`` over the exact char-n-gram set sizes of
+    the two docs' normalized texts (int64 numpy arrays in, the pandas
+    UDF's ``return_type`` out). The one pair-verify kernel under
+    ngram_jaccard_pairs_fast and ngram_overlap_pairs_fast.
 
-    ngram_jaccard joins each doc's full gram ARRAY onto every pair: a doc in
-    k candidate pairs ships its ~20-40 KB gram array k times through the
-    shuffle, and array_intersect/array_union then run per pair — measured as
-    53% of the whole 33-query bench at sf0.1 (30.5 s). This form instead
-    ships the doc's NORMALIZED TEXT (~1-2 KB, the minimal sufficient datum)
-    onto the pairs, then computes the Jaccard in one Arrow-batched pandas
-    UDF: gram sets are built ONCE PER DISTINCT TEXT per batch (memoized) as
-    sorted uint64 arrays and intersected with np.intersect1d. Semantics are
-    identical to ngram_jaccard (injective gram encoding for n <= 3, see
-    _gram_hash_np); the null result for two empty gram sets matches the
-    JVM form's 0/0 -> null.
+    No gram array ever enters a join or a shuffle: joining each doc's
+    ~20-40 KB gram array onto every pair and running array set math per
+    pair measured as 53% of the whole 33-query bench at sf0.1 (30.5 s).
 
-    Scale shape: two equi-joins on the id columns (broadcast when the docs
-    side is small; sort-merge at corpus scale) and one narrow pandas stage —
-    no gram arrays ever enter a shuffle.
+    - broadcast path (the corpus passes the driver-collect gate,
+      _bcast_norm_texts): only the pair ids enter the UDF, which looks
+      both texts up in the worker's vectorized gram state
+      (_pair_vec_state) — one numpy AND + popcount per batch;
+    - join path: two id-keyed joins ship each doc's NORMALIZED TEXT
+      (~1-2 KB, the minimal sufficient datum) onto the pairs, and gram
+      sets come from the worker-global memo (_gram_entry).
+
+    Both paths drop a pair whose side is absent from docs (inner-join
+    semantics), treat a null text as an empty gram set, and are exact
+    (injective gram encoding for n <= 3, see _gram_hash_np).
     """
-    def jac_rows(text_pairs):
-        # worker-global gram memo + bitmask intersection (see
-        # _gram_entry): gram building and the per-pair set merges both
-        # collapse to hash lookups + one AND/popcount per pair. null text
-        # == empty gram set (matches ngram_jaccard, where a null
-        # normalized text yields an empty grams array)
-        out = []
-        for x, y in text_pairs:
-            ea, eb = _gram_entry(x or "", n), _gram_entry(y or "", n)
-            inter = _pair_common(ea, eb)
-            union = ea[1] + eb[1] - inter
-            out.append(float(inter) / union if union else None)
-        return out
-
+    # the UDFs' `-> pd.Series` hint only selects the scalar pandas UDF
+    # type; for a struct return_type, finish returns a pd.DataFrame
     bc = _bcast_norm_texts(docs, text_col, id_col)
     if bc is not None:
 
-        @F.pandas_udf(T.DoubleType())
-        def _jac_bc(ia: pd.Series, ib: pd.Series) -> pd.Series:
+        @F.pandas_udf(return_type)
+        def _verify_bc(ia: pd.Series, ib: pd.Series) -> pd.Series:
             st = _pair_vec_state(bc, n)
-            inter, na, nb = _pair_counts_vec(
-                st, ia.to_numpy(np.int64), ib.to_numpy(np.int64))
-            union = na + nb - inter
-            with np.errstate(divide="ignore", invalid="ignore"):
-                vals = inter / union
-            # 0/0 -> nan, which the Arrow conversion nulls — identical to
-            # the scalar form's None for an empty union
-            vals = np.where(union == 0, np.nan, vals)
-            return pd.Series(vals, index=ia.index, dtype="float64")
+            return finish(*_pair_counts_vec(
+                st, ia.to_numpy(np.int64), ib.to_numpy(np.int64)))
 
         return (_pairs_with_known_ids(pairs, docs, id_col)
                 .select("id_a", "id_b",
-                        _jac_bc(F.col("id_a").cast("long"),
-                                F.col("id_b").cast("long"))
-                        .alias("jaccard")))
+                        _verify_bc(F.col("id_a").cast("long"),
+                                   F.col("id_b").cast("long")).alias("_v")))
 
     norm = docs.select(F.col(id_col),
                        normalized_text(F.col(text_col)).alias("_nt"))
     a, b = norm.alias("a"), norm.alias("b")
 
-    @F.pandas_udf(T.DoubleType())
-    def _jac(ta: pd.Series, tb: pd.Series) -> pd.Series:
-        return pd.Series(jac_rows(zip(ta, tb)), index=ta.index,
-                         dtype="float64")
+    @F.pandas_udf(return_type)
+    def _verify(ta: pd.Series, tb: pd.Series) -> pd.Series:
+        rows = []
+        for x, y in zip(ta, tb):
+            ea, eb = _gram_entry(x or "", n), _gram_entry(y or "", n)
+            rows.append((_pair_common(ea, eb), ea[1], eb[1]))
+        return finish(*np.array(rows, dtype=np.int64).reshape(-1, 3).T)
 
     return (
         pairs.join(a, pairs["id_a"] == F.col(f"a.{id_col}"))
         .join(b, pairs["id_b"] == F.col(f"b.{id_col}"))
         .select("id_a", "id_b",
-                _jac(F.col("a._nt"), F.col("b._nt")).alias("jaccard"))
+                _verify(F.col("a._nt"), F.col("b._nt")).alias("_v"))
     )
 
 
-def _ngram_array(col, n: int) -> F.Column:
-    """Char n-grams as an array column, JVM-side: substr over a sequence."""
-    norm = normalized_text(col)
-    return F.when(
-        F.length(norm) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.length(norm) - (n - 1)),
-            lambda i: F.substring(norm, 1, 0x7FFFFFFF).substr(i, F.lit(n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+def _jaccard_finish(inter: np.ndarray, na: np.ndarray,
+                    nb: np.ndarray) -> pd.Series:
+    union = na + nb - inter
+    with np.errstate(divide="ignore", invalid="ignore"):
+        vals = inter / union
+    # 0/0 -> nan, which the Arrow conversion nulls: two empty gram sets
+    # have no Jaccard
+    return pd.Series(np.where(union == 0, np.nan, vals), dtype="float64")
+
+
+def ngram_jaccard_pairs_fast(docs: DataFrame, pairs: DataFrame,
+                             text_col: str = "text", id_col: str = "doc_id",
+                             n: int = 3) -> DataFrame:
+    """Exact char-n-gram Jaccard (id_a, id_b, jaccard DOUBLE) for candidate
+    pairs — the verify stage after LSH. NULL when both gram sets are empty.
+    One double per pair crosses back from Python (see _pair_gram_verify
+    for the kernel and its scale shape)."""
+    return (_pair_gram_verify(docs, pairs, text_col, id_col, n,
+                              T.DoubleType(), _jaccard_finish)
+            .withColumnRenamed("_v", "jaccard"))
 
 
 def incremental_dedup(new_docs: DataFrame, corpus: DataFrame,
@@ -1368,55 +1339,16 @@ def ngram_overlap_pairs_fast(docs: DataFrame, pairs: DataFrame,
     duplication (a quote, a syndicated excerpt, a page wrapping another)
     which symmetric Jaccard under-scores.
 
-    Same kernel discipline as ngram_jaccard_pairs_fast: the pairs join
-    ships each doc's NORMALIZED TEXT once per pair, gram sets are built
-    once per distinct text per Arrow batch (memoized sorted uint64
-    arrays, injective encoding for n <= 3 — see _gram_hash_np), and the
+    Same kernel as ngram_jaccard_pairs_fast (_pair_gram_verify); the
     returned counts are exact integers so any engine reproduces them
-    bit-for-bit. No gram arrays ever enter a shuffle.
+    bit-for-bit.
     """
-    def ov_rows(text_pairs):
-        # worker-global gram memo + bitmask intersection, same kernel as
-        # ngram_jaccard_pairs_fast (see _gram_entry)
-        rows = []
-        for x, y in text_pairs:
-            ea, eb = _gram_entry(x or "", n), _gram_entry(y or "", n)
-            rows.append((_pair_common(ea, eb), ea[1], eb[1]))
-        return rows
+    def finish(inter, na, nb) -> pd.DataFrame:
+        return pd.DataFrame({"n_common": inter, "n_a": na, "n_b": nb})
 
-    bc = _bcast_norm_texts(docs, text_col, id_col)
-    if bc is not None:
-
-        @F.pandas_udf("n_common long, n_a long, n_b long")
-        def _ov_bc(ia: pd.Series, ib: pd.Series) -> pd.DataFrame:
-            st = _pair_vec_state(bc, n)
-            inter, na, nb = _pair_counts_vec(
-                st, ia.to_numpy(np.int64), ib.to_numpy(np.int64))
-            return pd.DataFrame({"n_common": inter, "n_a": na,
-                                 "n_b": nb}, index=ia.index)
-
-        return (_pairs_with_known_ids(pairs, docs, id_col)
-                .select("id_a", "id_b",
-                        _ov_bc(F.col("id_a").cast("long"),
-                               F.col("id_b").cast("long")).alias("_o"))
-                .select("id_a", "id_b", "_o.n_common", "_o.n_a", "_o.n_b"))
-
-    norm = docs.select(F.col(id_col),
-                       normalized_text(F.col(text_col)).alias("_nt"))
-    a, b = norm.alias("a"), norm.alias("b")
-
-    @F.pandas_udf("n_common long, n_a long, n_b long")
-    def _ov(ta: pd.Series, tb: pd.Series) -> pd.DataFrame:
-        return pd.DataFrame(ov_rows(zip(ta, tb)),
-                            columns=["n_common", "n_a", "n_b"],
-                            index=ta.index)
-
-    return (
-        pairs.join(a, pairs["id_a"] == F.col(f"a.{id_col}"))
-        .join(b, pairs["id_b"] == F.col(f"b.{id_col}"))
-        .select("id_a", "id_b", _ov(F.col("a._nt"), F.col("b._nt"))
-                .alias("_o"))
-        .select("id_a", "id_b", "_o.n_common", "_o.n_a", "_o.n_b"))
+    return (_pair_gram_verify(docs, pairs, text_col, id_col, n,
+                              "n_common long, n_a long, n_b long", finish)
+            .select("id_a", "id_b", "_v.n_common", "_v.n_a", "_v.n_b"))
 
 
 def containment_pairs(docs: DataFrame, pairs: DataFrame,

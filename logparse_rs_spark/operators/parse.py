@@ -23,7 +23,7 @@ per line unconditionally — columnar pruning is our structural win).
 
 from __future__ import annotations
 
-from typing import Iterable, Optional
+from typing import Iterable, List, Optional, Tuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -132,20 +132,40 @@ def rejected(parsed: DataFrame) -> DataFrame:
     return parsed.filter(F.col("status") != STATUS_OK)
 
 
-def project_type(parsed: DataFrame, schema: CompiledSchema, log_type: str,
-                 columns: Optional[Iterable[str]] = None,
+def typed_fields(schema: CompiledSchema, log_type: str,
                  anon: Optional[CompiledAnonymizer] = None,
-                 include_identity: bool = True,
-                 include_enrichment: bool = True,
-                 extra_cols: Iterable[str] = ()) -> DataFrame:
-    """Project the ok-rows of one log type to named columns.
+                 columns: Optional[Iterable[str]] = None
+                 ) -> List[Tuple[str, Column]]:
+    """(name, column) for each schema field of one log type, read from the
+    split `fields` array by position and wrapped in the field's compiled
+    anonymization when `anon` is given; `columns` keeps only those names.
 
     Positional zip of the type's sanitized names with the split fields;
     missing trailing fields -> null; duplicate sanitized name -> LAST position
-    wins (canonical Rust semantics, src/lib.rs:34-41). With `anon`, each
-    column is wrapped in its compiled anonymization expression — tokens are
-    pure functions, so anonymization is embarrassingly parallel here (the
-    reference serializes on a global lock, src/lib.rs:348).
+    wins (canonical Rust semantics, src/lib.rs:34-41)."""
+    pairs = schema.effective_positions(log_type)
+    if columns is not None:
+        wanted = set(columns)
+        pairs = [(n, p) for n, p in pairs if n in wanted]
+    out = []
+    for name, pos in pairs:
+        c = F.get(F.col("fields"), pos)
+        if anon is not None:
+            c = anonymize_expr(c, anon.plan_for(name), anon.default_salt)
+        out.append((name, c))
+    return out
+
+
+def project_type(parsed: DataFrame, schema: CompiledSchema, log_type: str,
+                 columns: Optional[Iterable[str]] = None,
+                 anon: Optional[CompiledAnonymizer] = None,
+                 extra_cols: Iterable[str] = ()) -> DataFrame:
+    """Project the ok-rows of one log type to named columns: identity
+    (url, line_ordinal), the typed fields (typed_fields), raw_excerpt,
+    hash64, then `extra_cols`. With `anon`, each column is wrapped in its
+    compiled anonymization expression — tokens are pure functions, so
+    anonymization is embarrassingly parallel here (the reference serializes
+    on a global lock, src/lib.rs:348).
 
     Physical-form note: the full-width TRAFFIC projection (117 F.get +
     anon expressions, whole-stage codegen) was measured against a single
@@ -153,22 +173,10 @@ def project_type(parsed: DataFrame, schema: CompiledSchema, log_type: str,
     JVM form 6.5-10s vs pandas form 21-25s at 1.23M rows / 8 cores — the
     codegen'd gets win ~3x, so wide projections stay JVM-side.
     """
-    pairs = schema.effective_positions(log_type)
-    if columns is not None:
-        wanted = set(columns)
-        pairs = [(n, p) for n, p in pairs if n in wanted]
-    out_cols = []
-    if include_identity:
-        out_cols += [F.col("url"), F.col("line_ordinal")]
-    for name, pos in pairs:
-        c = F.get(F.col("fields"), pos)
-        if anon is not None:
-            plan = anon.plan_for(name)
-            c = anonymize_expr(c, plan, anon.default_salt)
-        out_cols.append(c.alias(name))
-    if include_enrichment:
-        out_cols += [F.col("raw_excerpt"), F.col("hash64")]
-    out_cols += [F.col(c) for c in extra_cols]
+    out_cols = [F.col("url"), F.col("line_ordinal")]
+    out_cols += [c.alias(name) for name, c in
+                 typed_fields(schema, log_type, anon, columns)]
+    out_cols += [F.col(c) for c in ("raw_excerpt", "hash64", *extra_cols)]
     return (
         parsed
         .filter((F.col("status") == STATUS_OK) & (F.col("log_type") == log_type))

@@ -34,7 +34,9 @@ from pyspark.sql import functions as F
 
 from ..anonymizer import CompiledAnonymizer, load_anonymizer
 from ..operators.anonymize import audit_table
-from ..operators.parse import STATUS_OK, parse_lines, explode_lines, project_type
+from ..operators.parse import (STATUS_OK, explode_lines, fields_col,
+                               parse_lines, project_type, rejected,
+                               typed_fields)
 from ..schema import CompiledSchema, load_schema
 from ..sources.writers import ParquetWriter, make_writer
 
@@ -54,7 +56,6 @@ class SinkSpec:
     log_type: str
     table: str
     columns: Optional[Sequence[str]] = None   # None = full schema width
-    anonymize: bool = True
     payload: str = "columns"
 
 
@@ -65,9 +66,6 @@ class PipelineConfig:
     out_root: str
     sinks: List[SinkSpec]
     n_buckets: int = 64
-    audit_dims: Sequence[str] = ("source_address", "destination_address",
-                                 "device_name")
-    write_rejects: bool = True
     partitions_per_run: Optional[int] = None   # task parallelism; default 2x cores
     writer: Optional[object] = None   # injected sink writer; default make_writer
 
@@ -91,6 +89,10 @@ METRICS_TABLE = "_metrics"
 AUDIT_TABLE = "_audit"
 REJECTS_TABLE = "_rejects"
 
+# fields whose (original, replacement) pairs the audit sink records, when the
+# anonymizer transforms them
+AUDIT_DIMS = ("source_address", "destination_address", "device_name")
+
 # concurrent fan-out sink jobs: enough to hide per-job commit latency (task
 # parallelism inside each job already uses every core). Fixed, not
 # core-derived: more jobs meant more simultaneous partitionBy commits
@@ -100,29 +102,18 @@ SINK_CONCURRENCY = 4
 
 
 def build_map_payload(parsed: DataFrame, schema: CompiledSchema,
-                      anon_by_type: Dict[str, Optional[CompiledAnonymizer]]
-                      ) -> DataFrame:
+                      types: Sequence[str],
+                      anon: Optional[CompiledAnonymizer]) -> DataFrame:
     """Type-erased map<string,string> payload for the long-tail map sinks:
-    one when-chain over the configured types, each branch zipping the
-    type's schema names with the split fields (anonymized per its plan)."""
-    from ..operators.anonymize import anonymize_expr
-    from ..operators.parse import fields_col
-
-    types = list(anon_by_type)
+    one when-chain over the given types, each branch zipping the type's
+    schema names with its (anonymized) typed fields."""
     df = fields_col(parsed.filter(
-        (F.col("status") == STATUS_OK) & F.col("log_type").isin(types)))
+        (F.col("status") == STATUS_OK) & F.col("log_type").isin(list(types))))
     payload = None
     for t in types:
-        pairs = schema.effective_positions(t)
-        a = anon_by_type[t]
-        vals = []
-        for name, pos in pairs:
-            c = F.get(F.col("fields"), pos)
-            if a is not None:
-                c = anonymize_expr(c, a.plan_for(name), a.default_salt)
-            vals.append(c)
-        m = F.map_from_arrays(
-            F.array(*[F.lit(n) for n, _ in pairs]), F.array(*vals))
+        cols = typed_fields(schema, t, anon)
+        m = F.map_from_arrays(F.array(*[F.lit(n) for n, _ in cols]),
+                              F.array(*[c for _, c in cols]))
         payload = (F.when(F.col("log_type") == t, m) if payload is None
                    else payload.when(F.col("log_type") == t, m))
     return df.select("url", "line_ordinal", "log_type",
@@ -203,24 +194,20 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig,
     # split is the expensive kernel; paying it once in the stage pass keeps
     # the fan-out phase pure column reads)
     audit_dims_active = [
-        d for d in cfg.audit_dims
+        d for d in AUDIT_DIMS
         if anon is not None and anon.plan_for(d).mode is not None
     ]
     if audit_dims_active:
-        from ..operators.parse import fields_col
-
         sink_types = sorted({s.log_type for s in cfg.sinks})
         parsed_plan = fields_col(parsed_plan)
         for d in audit_dims_active:
             expr = None
             for t in sink_types:
-                pos = dict(schema.effective_positions(t)).get(d)
-                if pos is None:
-                    continue
-                cond = F.col("log_type") == t
-                val = F.get(F.col("fields"), pos)
-                expr = (F.when(cond, val) if expr is None
-                        else expr.when(cond, val))
+                # at most one (d, value) pair: the type's position of d
+                for _, val in typed_fields(schema, t, columns=(d,)):
+                    cond = F.col("log_type") == t
+                    expr = (F.when(cond, val) if expr is None
+                            else expr.when(cond, val))
             parsed_plan = parsed_plan.withColumn(
                 f"_adt_{d}",
                 expr if expr is not None else F.lit(None).cast("string"))
@@ -272,45 +259,34 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig,
 
     per_sink_rows: Dict[str, int] = {}
 
-    def write_sink(sink: SinkSpec) -> None:
-        projected = project_type(
-            parsed, schema, sink.log_type, columns=sink.columns,
-            anon=anon if sink.anonymize else None,
-            extra_cols=("bucket",),   # idempotent partition overwrite key
-        )
-        # cluster by the partition key BEFORE partitionBy: each bucket is
-        # written by exactly one task -> 1 file per bucket dir instead of
-        # (tasks x buckets) small files. The shuffle carries only this sink's
-        # projected columns, and at scale the 100-500MB bucket grain IS the
-        # file size you want; the file/commit count is what killed r1's
-        # sink phase (217s@8c vs 60s@2c, BENCH_r01).
-        projected = projected.repartition(cfg.n_buckets, "bucket")
-        writer.write(projected, sink.table, partition_by=["bucket"])
-
-    def write_columnar_group(sinks_in_table: List[SinkSpec]) -> None:
-        """Columnar sinks that SHARE a table fold into ONE write job:
-        per-type projections unioned by name (a type missing a column
-        yields nulls there) and written partitioned by (log_type, bucket)
-        — readers of one type still get partition pruning, replay still
-        overwrites only the touched (type, bucket) partitions, and the
-        phase pays one job's scheduling + codegen + commit instead of one
-        per type. At 8 cores the per-job fixed cost (~2-4 s of planning +
-        Janino codegen + commit setup, BENCH/BASELINE.md) dominated two
-        nearly-empty write jobs — folding them is the N->4N efficiency
-        lever, since fixed cost is what does NOT shrink with cores."""
-        parts = []
-        for s in sinks_in_table:
-            parts.append(project_type(
-                parsed, schema, s.log_type, columns=s.columns,
-                anon=anon if s.anonymize else None,
-                extra_cols=("log_type", "bucket"),
-            ))
+    def write_columnar(table: str, group: List[SinkSpec]) -> None:
+        """The columnar sinks of one table in ONE write job. A one-sink
+        table is partitioned by bucket (the idempotent partition overwrite
+        key). Sinks that SHARE a table fold into the one job: per-type
+        projections unioned by name (a type missing a column yields nulls
+        there) and written partitioned by (log_type, bucket) — readers of
+        one type still get partition pruning, replay still overwrites only
+        the touched (type, bucket) partitions, and the phase pays one job's
+        scheduling + codegen + commit instead of one per type. At 8 cores
+        the per-job fixed cost (~2-4 s of planning + Janino codegen +
+        commit setup, BENCH/BASELINE.md) dominated two nearly-empty write
+        jobs — folding them is the N->4N efficiency lever, since fixed
+        cost is what does NOT shrink with cores."""
+        keys = ["log_type", "bucket"] if table in shared_tables else ["bucket"]
+        parts = [project_type(parsed, schema, s.log_type, columns=s.columns,
+                              anon=anon, extra_cols=keys)
+                 for s in group]
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p, allowMissingColumns=True)
+        # cluster by the partition key BEFORE partitionBy: each bucket is
+        # written by exactly one task -> 1 file per bucket dir instead of
+        # (tasks x buckets) small files. The shuffle carries only this
+        # table's projected columns, and at scale the 100-500MB bucket grain
+        # IS the file size you want; the file/commit count is what killed
+        # r1's sink phase (217s@8c vs 60s@2c, BENCH_r01).
         out = out.repartition(cfg.n_buckets, "bucket")
-        writer.write(out, sinks_in_table[0].table,
-                     partition_by=["log_type", "bucket"])
+        writer.write(out, table, partition_by=keys)
 
     def write_map_sinks(map_sinks: List[SinkSpec]) -> None:
         """All map-payload sinks in ONE write job: type-erased
@@ -321,15 +297,14 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig,
         dirs cost ~2x the commit time at 64 buckets, and at 4096 buckets
         x T types the dir count would pressure catalog metadata for a
         long-tail table that is rarely read per-type."""
-        out = build_map_payload(
-            parsed, schema,
-            {s.log_type: (anon if s.anonymize else None) for s in map_sinks})
+        out = build_map_payload(parsed, schema,
+                                [s.log_type for s in map_sinks], anon)
         out = (out.repartition(cfg.n_buckets, "bucket")
                .sortWithinPartitions("log_type"))
         writer.write(out, map_sinks[0].table, partition_by=["bucket"])
 
     def write_rejects() -> None:
-        rejects = parsed.filter(F.col("status") != STATUS_OK).select(
+        rejects = rejected(parsed).select(
             "url", "line_ordinal", "bucket", "status", "log_type", "line")
         rejects = rejects.repartition(cfg.n_buckets, "bucket")
         writer.write(rejects, REJECTS_TABLE, partition_by=["bucket"])
@@ -351,6 +326,8 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig,
     col_groups: Dict[str, List[SinkSpec]] = {}
     for s in columnar_sinks:
         col_groups.setdefault(s.table, []).append(s)
+    # columnar tables holding several log types (the map table always does)
+    shared_tables = {t for t, g in col_groups.items() if len(g) > 1}
     # HEAVIEST-FIRST job order (classic LPT scheduling): the map-payload
     # union sink and the full-width columnar sinks dominate the phase's
     # critical path, so they enter the pool first and the small bookkeeping
@@ -359,12 +336,8 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig,
     if map_sinks:
         jobs.append((map_sinks[0].table, lambda: write_map_sinks(map_sinks)))
     for table, group in col_groups.items():
-        if len(group) == 1:
-            jobs.append((table, lambda s=group[0]: write_sink(s)))
-        else:
-            jobs.append((table, lambda g=group: write_columnar_group(g)))
-    if cfg.write_rejects:
-        jobs.append(("rejects", write_rejects))
+        jobs.append((table, lambda t=table, g=group: write_columnar(t, g)))
+    jobs.append(("rejects", write_rejects))
     jobs.append(("fine_stats", collect_fine_stats))
     if audit_dims_active:
         jobs.append(("audit", write_audit))
@@ -410,8 +383,7 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig,
     lines_in = sum(status_counts.values())
 
     for sink in cfg.sinks:
-        shared = (sink.payload == "map"
-                  or len(col_groups.get(sink.table, ())) > 1)
+        shared = sink.payload == "map" or sink.table in shared_tables
         key = (f"{sink.table}/log_type={sink.log_type}" if shared
                else sink.table)
         per_sink_rows[key] = type_counts.get(sink.log_type, 0)

@@ -78,40 +78,48 @@ class TestSimHash:
             assert key in exact and exact[key] == 0
 
 
+def _py_jaccard(ta, tb, n=3):
+    """Pure-Python reference: exact Jaccard of the code-point n-gram sets of
+    the normalized texts; None when both sets are empty."""
+    from logparse_rs_spark.dataops_fixtures import normalized_text_py
+
+    def grams(t):
+        t = normalized_text_py(t) or ""
+        return {t[i:i + n] for i in range(len(t) - n + 1)}
+
+    ga, gb = grams(ta), grams(tb)
+    union = len(ga | gb)
+    return len(ga & gb) / union if union else None
+
+
 class TestNgramJaccard:
     def test_self_pair_jaccard_one(self, spark, docs):
-        from logparse_rs_spark.operators.dedup import ngram_jaccard
+        from logparse_rs_spark.operators.dedup import ngram_jaccard_pairs_fast
         base = docs.limit(10).select("doc_id", "text")
         clones = base.withColumn("doc_id", F.col("doc_id") + 1_000_000)
         both = base.union(clones)
         pairs = base.select(
             F.col("doc_id").alias("id_a"),
             (F.col("doc_id") + 1_000_000).alias("id_b"))
-        out = ngram_jaccard(both, pairs)
-        for r in out.collect():
-            assert r["jaccard"] == pytest.approx(1.0)
+        out = ngram_jaccard_pairs_fast(both, pairs).collect()
+        assert len(out) == 10
+        for r in out:
+            assert r["jaccard"] == 1.0
 
     def test_jaccard_matches_python(self, spark, docs):
-        from logparse_rs_spark.operators.dedup import ngram_jaccard
-        import re
+        from logparse_rs_spark.operators.dedup import ngram_jaccard_pairs_fast
         base = docs.limit(8).select("doc_id", "text")
         ids = [r["doc_id"] for r in base.select("doc_id").collect()]
         pairs = spark.createDataFrame(
             [(ids[i], ids[j]) for i in range(len(ids))
              for j in range(i + 1, len(ids))],
             "id_a long, id_b long")
-        got = {(r["id_a"], r["id_b"]): r["jaccard"]
-               for r in ngram_jaccard(base, pairs, n=3).collect()}
+        got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in
+               ngram_jaccard_pairs_fast(base, pairs, n=3).collect()}
         texts = {r["doc_id"]: r["text"] for r in base.collect()}
-
-        def grams(t):
-            t = re.sub(r"\s+", " ", t.lower()).strip()
-            return {t[i:i + 3] for i in range(len(t) - 2)} if len(t) >= 3 else set()
-
+        assert len(got) == 28
         for (a, b), j in got.items():
-            ga, gb = grams(texts[a]), grams(texts[b])
-            want = len(ga & gb) / len(ga | gb) if ga | gb else None
-            assert j == pytest.approx(want, abs=1e-9), (a, b)
+            assert j == _py_jaccard(texts[a], texts[b]), (a, b)
 
 
 class TestTextOps:
@@ -373,8 +381,9 @@ class TestDuplicateHeavy:
 
 
 class TestFastJaccardVerify:
-    """ngram_jaccard_pairs_fast must be value-identical to the JVM array
-    form (injective 21-bit gram packing for n=3, null/empty/unicode edges)."""
+    """ngram_jaccard_pairs_fast must equal pure-Python code-point 3-gram set
+    Jaccard exactly (injective 21-bit gram packing for n=3), on both the
+    broadcast and the join path, including null/empty/unicode edges."""
 
     EDGE_ROWS = [(1, "Hello  World, this is a test"),
                  (2, "hello world, this is a test"),
@@ -388,29 +397,34 @@ class TestFastJaccardVerify:
             [(a, b) for a in range(1, n + 1) for b in range(a + 1, n + 1)],
             "id_a long, id_b long")
 
-    def test_matches_array_form_on_edges(self, spark):
-        from logparse_rs_spark.operators.dedup import (
-            ngram_jaccard, ngram_jaccard_pairs_fast)
+    @pytest.mark.parametrize("path", ["broadcast", "join"])
+    def test_matches_python_sets_on_edges(self, spark, monkeypatch, path):
+        from logparse_rs_spark.operators.dedup import ngram_jaccard_pairs_fast
+        if path == "join":   # a zero budget rejects the text broadcast
+            monkeypatch.setattr(gate, "BUDGET_BYTES", 0)
         d = spark.createDataFrame(self.EDGE_ROWS, "doc_id long, text string")
-        p = self._all_pairs(spark, 8)
-        old = ngram_jaccard(d, p, n=3).withColumn(
-            "jaccard", F.round("jaccard", 9))
-        new = ngram_jaccard_pairs_fast(d, p, n=3).withColumn(
-            "jaccard", F.round("jaccard", 9))
-        assert old.count() == new.count() == 28
-        assert old.exceptAll(new).count() == 0
-        assert new.exceptAll(old).count() == 0
+        got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in
+               ngram_jaccard_pairs_fast(d, self._all_pairs(spark, 8),
+                                        n=3).collect()}
+        gates = [r for r in gate.RECORD if r["event"] == "gate"
+                 and r["what"] == "pair_verify_texts"]
+        assert gates[-1]["admitted"] is (path == "broadcast")
+        texts = dict(self.EDGE_ROWS)
+        want = {(a, b): _py_jaccard(texts[a], texts[b])
+                for a in range(1, 9) for b in range(a + 1, 9)}
+        assert got == want
 
-    def test_matches_array_form_on_corpus(self, spark, docs):
+    def test_matches_python_sets_on_corpus(self, spark, docs):
         from logparse_rs_spark.operators.dedup import (
-            minhash_near_dup, ngram_jaccard, ngram_jaccard_pairs_fast)
+            minhash_near_dup, ngram_jaccard_pairs_fast)
         pairs = minhash_near_dup(docs, max_bucket=1000)
-        old = ngram_jaccard(docs, pairs, n=3).withColumn(
-            "jaccard", F.round("jaccard", 9))
-        new = ngram_jaccard_pairs_fast(docs, pairs, n=3).withColumn(
-            "jaccard", F.round("jaccard", 9))
-        assert old.count() == new.count() > 0
-        assert old.exceptAll(new).count() == 0
+        got = ngram_jaccard_pairs_fast(docs, pairs, n=3).collect()
+        texts = {r["doc_id"]: r["text"]
+                 for r in docs.select("doc_id", "text").collect()}
+        assert len(got) == pairs.count() > 0
+        for r in got:
+            assert r["jaccard"] == _py_jaccard(texts[r["id_a"]],
+                                               texts[r["id_b"]])
 
     def test_gram_hash_injective_matches_strings(self):
         from logparse_rs_spark.operators.dedup import _gram_hash_np

@@ -54,6 +54,14 @@ class TestMapSinks:
             want["TRAFFIC"]
         assert result.per_sink_rows["sink_fact/log_type=THREAT"] == \
             want["THREAT"]
+        # the shared columnar table is partitioned by (log_type, bucket)
+        fact_dirs = sorted(d for d in os.listdir(os.path.join(out, "sink_fact"))
+                           if not d.startswith(("_", ".")))
+        assert fact_dirs == ["log_type=THREAT", "log_type=TRAFFIC"]
+        for d in fact_dirs:
+            sub = [b for b in os.listdir(os.path.join(out, "sink_fact", d))
+                   if not b.startswith(("_", "."))]
+            assert sub and all(b.startswith("bucket=") for b in sub)
         fact = ParquetWriter(out).read(spark, "sink_fact")
         got_fact = {r["log_type"]: r["count"]
                     for r in fact.groupBy("log_type").count().collect()}

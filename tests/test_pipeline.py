@@ -76,6 +76,10 @@ class TestPipeline:
         writer = ParquetWriter(cfg.out_root)
         traffic = writer.read(spark, "sink_traffic")
         assert traffic.count() == want_counts["TRAFFIC"]
+        # a one-sink table is partitioned by bucket alone
+        dirs = [d for d in os.listdir(writer.path("sink_traffic"))
+                if not d.startswith(("_", "."))]
+        assert dirs and all(d.startswith("bucket=") for d in dirs)
 
         # anonymized content parity on a sample of rows
         recs_anon = fixtures.expected_records(pages_cols, full_schema, sample_anon)

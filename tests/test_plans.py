@@ -39,8 +39,11 @@ class TestParsePlans:
         schema = load_schema(os.path.join(ROOT, "schemas", "schema.json"))
         pages = spark.createDataFrame(
             [("u", "a,b,c,SYSTEM,x", "en")], "url string, text string, lang string")
-        df = parse_pages(pages, schema).groupBy("log_type").count()
+        parsed = parse_pages(pages, schema)
+        df = parsed.groupBy("log_type").count()
         assert "_hash64_of" not in plan_of(df)
+        # the name is really the hash UDF's: a hash64 reader does plan it
+        assert "_hash64_of" in plan_of(parsed.select("hash64"))
 
 
 class TestJoinPlans:

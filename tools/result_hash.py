@@ -2,7 +2,9 @@
 """Order-insensitive result fingerprints for every queries() entry at any
 sf dir — the cross-revision equivalence proof for optimization work: run it
 on the old tree and the new tree and diff the JSON. Same normalization and
-hash as tools/check_oracle.py.
+hash as tools/check_oracle.py. Each stdout line also carries the query's
+seconds (define + collect); the JSON keeps only rows/hash/cols so it diffs
+cleanly across trees.
 
 Usage: python tools/result_hash.py [sf_dir] [out.json] [query ...]
 """
@@ -58,14 +60,16 @@ def main():
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        t0 = time.time()
         try:
             df = fn(spark, sf_dir)
             rows = df.collect()
+            secs = time.time() - t0
             out[name] = {"rows": len(rows),
                          "hash": value_hash(rows, df.columns),
                          "cols": sorted(df.columns)}
-            print(f"{name}: rows={len(rows)} hash={out[name]['hash']}",
-                  flush=True)
+            print(f"{name}: rows={len(rows)} hash={out[name]['hash']} "
+                  f"secs={secs:.2f}", flush=True)
         except Exception as e:
             out[name] = {"error": f"{e.__class__.__name__}: {e}"[:300]}
             print(f"{name}: ERROR {out[name]['error'][:120]}", flush=True)
